@@ -110,12 +110,15 @@ object Bench {
     // cache — the TableRasterSource reshape is a per-session cost (paid
     // once, reused by every raster query), not a per-query cost. Its
     // duration is reported separately so readers can see both numbers.
+    // A failing warmup ends the run with its exception: a bench that went
+    // on would time the cold path it was meant to exclude. The session is
+    // stopped first so its threads cannot keep the JVM alive.
     val warm0 = System.nanoTime()
     try {
       SparkEntry.entry(spark).count()
       val g = QueryLib.eventsGrid(spark, sfDir)
       QueryLib.eventsRaster(sfDir, g).frame(QueryLib.fullReq(g))(spark).count()
-    } catch { case _: Throwable => }
+    } catch { case e: Throwable => spark.stop(); throw e }
     val warmupSec = (System.nanoTime() - warm0) / 1e9
     // One short line per query as it completes: each survives log-tail
     // truncation on its own, so per-query timings are machine-readable
@@ -168,7 +171,7 @@ object Bench {
       name -> sec
     }.to(scala.collection.immutable.ListMap)
     // steady-state lane: the top-10 slowest queries re-run 10× in one
-    // session (the RepBench protocol). min-of-last-5 separates plan
+    // session. min-of-last-5 separates plan
     // cost from JIT transients and host-contention windows, so
     // cross-round sub-second comparisons stop depending on window
     // calibration (r9 saw ST calibration swing ±18% between two

@@ -47,41 +47,67 @@ object SinkFunnel {
   }
 }
 
+/** The single-file vector codecs, by file extension: one streaming writer
+  * each, taking (frame, projection, path). Every writer funnels the frame
+  * through the driver in fid order, one partition at a time. */
+object SingleFileSinks {
+  private type Writer = (DataFrame, String, String, SparkSession) => String
+
+  private val writers: Map[String, Writer] = Map(
+    "shp"     -> (ShapefileSink.writeStream(_, _, _)(_)),
+    "gpkg"    -> (GeoPackageSink.writeStream(_, _, _)(_)),
+    "gml"     -> (GmlSink.writeStream(_, _, _)(_)),
+    "fgb"     -> (FlatGeobufSink.writeStream(_, _, _)(_)),
+    "csv"     -> (CsvWktSink.writeStream(_, _, _)(_)),
+    "kml"     -> (KmlSink.writeStream(_, _, _)(_)),
+    "gpx"     -> (GpxSink.writeStream(_, _, _)(_)),
+    "mif"     -> (MifSink.writeStream(_, _, _)(_)),
+    "dxf"     -> (DxfSink.writeStream(_, _, _)(_)),
+    "tab"     -> (TabSink.writeStream(_, _, _)(_)),
+    "geojson" -> (GeoJsonSink.writeStream(_, _, _)(_)),
+    "json"    -> (GeoJsonSink.writeStream(_, _, _)(_)))
+
+  /** The formats [[GeometryFileSink]] writes as per-request tiles: all but
+    * GeoJSON, whose sink format is the partitioned feature-line layout. */
+  val tileFormats: Set[String] = writers.keySet -- Set("geojson", "json")
+
+  /** Lower-cased extension of `path`, "" when it has none. */
+  def extensionOf(path: String): String = {
+    val name = new java.io.File(path).getName
+    val dot = name.lastIndexOf('.')
+    if (dot < 0) "" else name.substring(dot + 1).toLowerCase
+  }
+
+  def supports(ext: String): Boolean = writers.contains(ext)
+
+  def write(ext: String, df: DataFrame, proj: String, path: String)
+      (implicit spark: SparkSession): String = {
+    val writer = writers.getOrElse(ext, throw new IllegalArgumentException(
+      s"no single-file writer for .$ext (supported: ${writers.keys.toSeq.sorted.mkString("/")})"))
+    writer(df, proj, path, spark)
+  }
+}
+
 case class GeometryFileSink(source: GeometryBlock, url: String,
     format: String = "geoparquet", fields: Option[Seq[String]] = None) {
-  require(Set("geoparquet", "geojson", "shp", "gpkg", "gml", "fgb", "csv",
-    "kml", "gpx", "mif", "dxf", "tab").contains(format), s"unsupported format $format")
+  require(format == "geoparquet" || format == "geojson" ||
+    SingleFileSinks.tileFormats.contains(format), s"unsupported format $format")
 
   def write(req: GeometryRequest)(implicit spark: SparkSession): String = {
     // single-file OGR-style formats follow the reference's tile contract:
     // one <requesthash>.<ext> file per request into the directory, merged
     // later by mergeFiles (sinks.py:116-169)
-    if (Set("shp", "gpkg", "gml", "fgb", "csv", "kml", "gpx", "mif",
-        "dxf", "tab").contains(format)) {
+    if (SingleFileSinks.tileFormats.contains(format)) {
       java.nio.file.Files.createDirectories(java.nio.file.Paths.get(url))
       val hash = java.security.MessageDigest.getInstance("MD5")
         .digest(req.toString.getBytes("UTF-8"))
         .map("%02x".format(_)).mkString.take(7)
-      val out = s"$url/$hash.$format"
       val src = fields match {
         case Some(cols) => ProjectedGeometryBlock(source, cols.toSet + "geometry")
         case None       => source
       }
-      format match {
-        case "shp"  => ShapefileSink.write(src, out, req)
-        case "gpkg" => GeoPackageSink.write(src, out, req)
-        case "gml"  => GmlSink.write(src, out, req)
-        // the newer codecs only have the streaming writers — strictly
-        // more capable than the guarded tile write
-        case "fgb"  => FlatGeobufSink.writeStream(src.frame(req), src.projection, out)
-        case "csv"  => CsvWktSink.writeStream(src.frame(req), src.projection, out)
-        case "gpx"  => GpxSink.writeStream(src.frame(req), src.projection, out)
-        case "mif"  => MifSink.writeStream(src.frame(req), src.projection, out)
-        case "dxf"  => DxfSink.writeStream(src.frame(req), src.projection, out)
-        case "tab"  => TabSink.writeStream(src.frame(req), src.projection, out)
-        case _      => KmlSink.writeStream(src.frame(req), src.projection, out)
-      }
-      return out
+      return SingleFileSinks.write(format, src.frame(req), src.projection,
+        s"$url/$hash.$format")
     }
     val df = source.frame(req)
     val cols = fields.getOrElse(df.columns.toSeq.filterNot(_ == "geometry"))
@@ -121,16 +147,6 @@ case class GeometryFileSink(source: GeometryBlock, url: String,
   }
 }
 
-/** Driver-side adapter handing a pre-built frame to the single-file sinks
-  * (mergeFiles only; the frame rides outside the product so token/serde
-  * see just the schema). */
-case class MergedFrameBlock(cols: Set[String], proj: String)(
-    @transient val df: DataFrame) extends GeometryBlock {
-  override def columns: Set[String] = cols
-  override def projection: String = proj
-  override def frame(req: GeometryRequest)(implicit spark: SparkSession): DataFrame = df
-}
-
 /** Column-projected view of a block (the sink's `fields` subset). */
 case class ProjectedGeometryBlock(source: GeometryBlock, keep: Set[String])
     extends GeometryBlock {
@@ -154,7 +170,7 @@ object GeometryFileSink {
     // (sinks.py:180) — never silently overwrite a previous export
     if (new java.io.File(target).exists()) throw new java.io.IOException(
       s"Target '$target' already exists")
-    val ext = target.substring(target.lastIndexOf('.') + 1).toLowerCase
+    val ext = SingleFileSinks.extensionOf(target)
     val parts = Option(new java.io.File(path).listFiles).toSeq.flatten
       .filter(_.getName.toLowerCase.endsWith("." + ext)).sortBy(_.getName)
     require(parts.nonEmpty, s"no .$ext files under $path to merge")
@@ -162,25 +178,9 @@ object GeometryFileSink {
     val frames = sources.map(_.frame(GeometryRequest()))
     val merged = frames.reduce(_ unionByName _)
     // streaming append: the merged union is written through the codec's
-    // toLocalIterator path, so totals far beyond the per-request geometry
-    // guard export with bounded driver memory (reference merge_files
-    // appends tile-by-tile through one OGR handle the same way)
-    val proj = sources.head.projection
-    ext match {
-      case "shp"  => ShapefileSink.writeStream(merged, proj, target)
-      case "gpkg" => GeoPackageSink.writeStream(merged, proj, target)
-      case "gml"  => GmlSink.writeStream(merged, proj, target)
-      case "fgb"  => FlatGeobufSink.writeStream(merged, proj, target)
-      case "csv"  => CsvWktSink.writeStream(merged, proj, target)
-      case "kml"  => KmlSink.writeStream(merged, proj, target)
-      case "gpx"  => GpxSink.writeStream(merged, proj, target)
-      case "mif"  => MifSink.writeStream(merged, proj, target)
-      case "dxf"  => DxfSink.writeStream(merged, proj, target)
-      case "tab"  => TabSink.writeStream(merged, proj, target)
-      case "geojson" | "json" => GeoJsonSink.writeStream(merged, proj, target)
-      case other  => throw new IllegalArgumentException(
-        s"mergeFiles supports shp/gpkg/gml/fgb/csv/kml/gpx/mif/dxf/tab/geojson targets, not .$other")
-    }
+    // toLocalIterator path with bounded driver memory (reference
+    // merge_files appends tile-by-tile through one OGR handle the same way)
+    SingleFileSinks.write(ext, merged, sources.head.projection, target)
     if (removeSource) parts.foreach(_.delete())
     target
   }
@@ -245,12 +245,11 @@ case class GeoParquetSource(url: String, proj: String = "EPSG:28992") extends Ge
 object GeometryToFile {
   def toFile(source: GeometryBlock, url: String, format: String = "geoparquet",
       fields: Option[Seq[String]] = None)(implicit spark: SparkSession): String = {
-    val lower = url.toLowerCase
     // single-file OGR-style formats dispatch on extension, like the
-    // reference's to_file — exported through the codecs' STREAMING writers,
-    // so totals beyond the per-request geometry guard work (the reference
-    // achieves the same with GeometryTiler tiles + merge_files,
-    // sinks.py:224-284); everything else goes through the partitioned sink
+    // reference's to_file — exported through the codecs' streaming writers
+    // (the reference achieves the same with GeometryTiler tiles +
+    // merge_files, sinks.py:224-284); everything else goes through the
+    // partitioned sink
     def frame = {
       val df = source.frame(GeometryRequest(mode = "centroid"))
       fields match {
@@ -261,29 +260,10 @@ object GeometryToFile {
         case None => df
       }
     }
-    if (lower.endsWith(".shp"))
-      ShapefileSink.writeStream(frame, source.projection, url)
-    else if (lower.endsWith(".gpkg"))
-      GeoPackageSink.writeStream(frame, source.projection, url)
-    else if (lower.endsWith(".gml"))
-      GmlSink.writeStream(frame, source.projection, url)
-    else if (lower.endsWith(".fgb"))
-      FlatGeobufSink.writeStream(frame, source.projection, url)
-    else if (lower.endsWith(".csv"))
-      CsvWktSink.writeStream(frame, source.projection, url)
-    else if (lower.endsWith(".kml"))
-      KmlSink.writeStream(frame, source.projection, url)
-    else if (lower.endsWith(".gpx"))
-      GpxSink.writeStream(frame, source.projection, url)
-    else if (lower.endsWith(".mif"))
-      MifSink.writeStream(frame, source.projection, url)
-    else if (lower.endsWith(".dxf"))
-      DxfSink.writeStream(frame, source.projection, url)
-    else if (lower.endsWith(".tab"))
-      TabSink.writeStream(frame, source.projection, url)
-    else if (lower.endsWith(".geojson") || lower.endsWith(".json"))
-      GeoJsonSink.writeStream(frame, source.projection, url)
-    else if (lower.endsWith(".kmz")) {
+    val ext = SingleFileSinks.extensionOf(url)
+    if (SingleFileSinks.supports(ext))
+      SingleFileSinks.write(ext, frame, source.projection, url)
+    else if (ext == "kmz") {
       // OGC KML 2.2 §5.2: a kmz is a zip whose main document is doc.kml
       val tmp = java.nio.file.Files.createTempFile("graft_kmz", ".kml")
       try {

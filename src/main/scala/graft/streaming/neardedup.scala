@@ -17,10 +17,11 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode
   * ONE `flatMapGroupsWithState` keyed by (band, bucket) — state is a
   * single claimed flag per DISTINCT BUCKET EVER PROBED. That is
   * O(bands × chain heads) only while near-dups re-touch their head's
-  * buckets; measured on a 40%-near-dup stream (SoakR12) each rejected
-  * variant perturbs ~1.5 fresh buckets, so unbounded-retention state
-  * grows linearly with stream length. For indefinite ingest pass
-  * `ttlMs`: buckets not re-probed within the window expire (the
+  * buckets; measured over ≥50 micro-batches of a 40%-near-dup
+  * stream, each rejected variant perturbs ~1.5 fresh buckets, so
+  * unbounded-retention state grows linearly with stream length. For
+  * indefinite ingest pass `ttlMs`: buckets not re-probed within the
+  * window expire (the
   * `dropDuplicatesWithinWatermark` trade — admission dedups against
   * the trailing window, state is bounded by the window's distinct
   * buckets). The per-document AND-reduction is
@@ -43,7 +44,7 @@ object StreamNearDedup {
   /** Explicit opt-in to UNBOUNDED state retention: admission is exact
     * against ALL history, and the state store grows linearly with the
     * distinct buckets ever probed (~1.5 fresh buckets per rejected
-    * near-dup variant measured on the SoakR12 40%-near-dup stream:
+    * near-dup variant, measured on a 40%-near-dup stream:
     * ~27k state rows at 18k docs, vs a 1.9–3.4k plateau with a TTL).
     * Suitable for finite backfills and the static one-batch path; an
     * indefinite ingest pipeline must pass a positive `ttlMs` instead

@@ -41,7 +41,7 @@ object CodecFuzzProps extends Properties("codec-fuzz") {
       Seq(("id", org.apache.spark.sql.types.LongType),
         ("v", org.apache.spark.sql.types.DoubleType),
         ("name", org.apache.spark.sql.types.StringType)),
-      rows.map(_._2))
+      _ => rows.map(_._2(2).toString.length).max)
     Shapefile.write(base.toString + ".shp", rows, fields, "EPSG:28992")
     val shp = Files.readAllBytes(Paths.get(base.toString + ".shp"))
     val shx = Files.readAllBytes(Paths.get(base.toString + ".shx"))

@@ -123,9 +123,10 @@ object CodecRoundTripProps extends Properties("codec-roundtrip") {
     val block = SeqGeometrySource(rows,
       proj = if (ext == "geojson") "EPSG:4326" else "EPSG:28992")
     val source: GeometryBlock = ext match {
-      case "shp"  => ShapefileSink.write(block, out, GeometryRequest()); GeometryFileSource(out)
-      case "gpkg" => GeoPackageSink.write(block, out, GeometryRequest()); GeometryFileSource(out)
-      case "gml"  => GmlSink.write(block, out, GeometryRequest()); GeometryFileSource(out)
+      case "shp" | "gpkg" | "gml" =>
+        // the streaming writer every single-file export goes through
+        SingleFileSinks.write(ext, block.frame(GeometryRequest()), block.projection, out)
+        GeometryFileSource(out)
       case "geojson" =>
         val dir = tmpRoot.resolve(s"rtdir_${counter.get()}").toString
         GeometryFileSink(block, dir, "geojson").write(GeometryRequest())

@@ -71,7 +71,8 @@ class GeoPackageSpec extends SparkSpec {
   test("GeoPackageSink writes a file the source round-trips exactly") {
     val out = java.nio.file.Files.createTempDirectory("gpkg_sink")
       .resolve("export.gpkg").toString
-    GeoPackageSink.write(GeometryFixtures.features, out, GeometryRequest())
+    GeoPackageSink.writeStream(GeometryFixtures.features.frame(GeometryRequest()),
+      GeometryFixtures.features.projection, out)
     val src = GeoPackageSource(out)
     assert(src.projection == "EPSG:28992")
     assert(src.columns == Set("value", "name", "geometry"))
@@ -97,7 +98,8 @@ class GeoPackageSpec extends SparkSpec {
     }
     val out = java.nio.file.Files.createTempDirectory("gpkg_sink_big")
       .resolve("big.gpkg").toString
-    GeoPackageSink.write(SeqGeometrySource(rows), out, GeometryRequest())
+    val block = SeqGeometrySource(rows)
+    GeoPackageSink.writeStream(block.frame(GeometryRequest()), block.projection, out)
     val df = GeoPackageSource(out).frame(GeometryRequest()).cache()
     assert(df.count() == 3000)
     val r97 = df.filter(col("fid") === 97).head()

@@ -203,25 +203,39 @@ class PlanSpec extends SparkSpec {
     // pre-aggregate's only consumer was the scoring join, and it bought
     // a corpus-sized multi-column exchange for a within-doc
     // duplicate-rate compression. The pinned invariants are now:
-    //   - the MODEL side of the scoring join is an aggregate (never a
+    //   - the MODEL side of the scoring join is the aggregated n-gram
+    //     count table — checkpointed, so the optimized plan holds it as
+    //     a LogicalRDD — and carries no corpus positions (never a
     //     positions-vs-positions join),
     //   - the PROBE side is the raw instance stream (a reappearing
     //     pre-aggregate = the removed corpus exchange sneaking back),
     //   - nothing goes cartesian (the 1-row totals broadcast is a BNLJ
     //     by design).
-    import org.apache.spark.sql.catalyst.plans.logical.{Aggregate, Join}
-    for (q <- Seq("p33_bigram_perplexity", "p38_trigram_perplexity")) {
+    import org.apache.spark.sql.catalyst.expressions.{AttributeReference, EqualTo}
+    import org.apache.spark.sql.catalyst.plans.logical.{Aggregate, Generate, Join}
+    import org.apache.spark.sql.execution.LogicalRDD
+    // the scoring join is the one keyed on exactly the n-gram columns —
+    // picked by its keys, not by collect order, so optimizer reordering
+    // or the 1-row totals join cannot stand in for it
+    def equiKeys(j: Join): Set[String] = j.condition.toSeq.flatMap(_.collect {
+      case EqualTo(l: AttributeReference, r: AttributeReference)
+          if l.name == r.name => l.name
+    }).toSet
+    for ((q, grams) <- Seq("p33_bigram_perplexity" -> Set("w1", "w2"),
+        "p38_trigram_perplexity" -> Set("w1", "w2", "w3"))) {
       val qe = SparkEntry.queries(q)(spark, dir).queryExecution
       val joins = qe.optimizedPlan.collect { case j: Join => j }
-      assert(joins.nonEmpty, q)
-      val scoring = joins.head
-      val rightIsModel =
-        scoring.right.collect { case a: Aggregate => a }.nonEmpty
-      val modelSide = if (rightIsModel) scoring.right else scoring.left
-      val probeSide = if (rightIsModel) scoring.left else scoring.right
-      assert(modelSide.collect { case a: Aggregate => a }.nonEmpty,
-        s"$q: scoring join must take an aggregated model table")
-      assert(probeSide.collect { case a: Aggregate => a }.isEmpty,
+      val scorings = joins.filter(j => equiKeys(j) == grams)
+      assert(scorings.size == 1,
+        s"$q: expected one join keyed on $grams, got ${joins.map(equiKeys)}")
+      val scoring = scorings.head
+      val (probeSides, modelSides) = Seq(scoring.left, scoring.right)
+        .partition(_.collect { case g: Generate => g }.nonEmpty)
+      assert(probeSides.size == 1 && modelSides.size == 1,
+        s"$q: exactly one side of the scoring join explodes corpus positions")
+      assert(modelSides.head.collect { case r: LogicalRDD => r }.nonEmpty,
+        s"$q: scoring join must take the checkpointed model table")
+      assert(probeSides.head.collect { case a: Aggregate => a }.isEmpty,
         s"$q: probe side must stay the instance stream (no per-doc " +
           "pre-aggregate exchange)")
       assert(!plan(q).contains("CartesianProduct"), q)
