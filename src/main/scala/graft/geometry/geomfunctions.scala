@@ -54,7 +54,6 @@ object GeomFunctions extends Serializable {
     * caller must use [[readWkb]] (and `.copy()` before editing), or it
     * silently corrupts results for unrelated rows that hit the memo. */
   def readWkbCached(b: Array[Byte]): Geometry = {
-    if (memoOff) return readWkb(b)
     val m = wkbMemoTL.get
     val b0 = m(0).asInstanceOf[Array[Byte]]
     if (b0 != null && java.util.Arrays.equals(b0, b)) {
@@ -77,10 +76,6 @@ object GeomFunctions extends Serializable {
   }
   private val SlotA: AnyRef = java.lang.Integer.valueOf(0)
   private val SlotB: AnyRef = java.lang.Integer.valueOf(2)
-  /** Measurement escape hatch: -Dgraft.wkb.memo.off=true bypasses the
-    * memo (every call re-parses). Read once at class init, so the JIT
-    * folds the branch away in the common (memo on) configuration. */
-  private val memoOff = java.lang.Boolean.getBoolean("graft.wkb.memo.off")
 
   /** Per-thread single-entry memo for the request's constant filter WKT:
     * predicate UDFs run once per row, and re-parsing (plus re-indexing)

@@ -43,6 +43,26 @@ object SpatialJoin {
   private def cellId(cx: Long, cy: Long): Long =
     (cx << 32) | (cy & 0xFFFFFFFFL)
 
+  /** The (2·rings+1)² cell ids within `rings` of cell (cx, cy), dx outer
+    * and dy inner; a ring cell outside the 32-bit grid fails loudly. */
+  private def ringCellIds(cx: Long, cy: Long, rings: Int): Array[Long] = {
+    require(cx - rings >= Int.MinValue && cx + rings <= Int.MaxValue &&
+      cy - rings >= Int.MinValue && cy + rings <= Int.MaxValue,
+      s"cell ($cx, $cy) ± $rings rings exceeds the 32-bit cell grid: " +
+        "raise cellSize")
+    val out = new Array[Long]((2 * rings + 1) * (2 * rings + 1))
+    var i = 0
+    var dx = -rings
+    while (dx <= rings) {
+      var dy = -rings
+      while (dy <= rings) {
+        out(i) = cellId(cx + dx, cy + dy); i += 1; dy += 1
+      }
+      dx += 1
+    }
+    out
+  }
+
   /** Pairs (a_fid, b_fid) whose geometries intersect (boundary contact
     * counts, JTS semantics). Inputs are geometry frames (`fid` +
     * `geometry` WKB). */
@@ -238,13 +258,8 @@ object SpatialJoin {
       cellId(cx, cy)
     }
     val ringCells = udf { (x: Double, y: Double) =>
-      val cx = math.floor(x / cellSize).toLong
-      val cy = math.floor(y / cellSize).toLong
-      require(cx - rings >= Int.MinValue && cx + rings <= Int.MaxValue &&
-        cy - rings >= Int.MinValue && cy + rings <= Int.MaxValue,
-        s"coordinates ($x, $y) exceed the 32-bit cell grid: raise cellSize")
-      (for (dx <- -rings to rings; dy <- -rings to rings)
-        yield cellId(cx + dx, cy + dy)).toArray
+      ringCellIds(math.floor(x / cellSize).toLong,
+        math.floor(y / cellSize).toLong, rings)
     }
     val l = centroids(left, "a_fid", "ax", "ay")
       .withColumn("cell", explode(ringCells(col("ax"), col("ay"))))
@@ -264,23 +279,7 @@ object SpatialJoin {
       if (!skewGuard) Set.empty[Long]
       else {
         val shiftCells = udf { (c: Long) =>
-          val cx = c >> 32
-          val cy = c.toInt.toLong
-          require(cx - rings >= Int.MinValue && cx + rings <= Int.MaxValue &&
-            cy - rings >= Int.MinValue && cy + rings <= Int.MaxValue,
-            s"cell ($cx, $cy) ± $rings rings exceeds the 32-bit cell " +
-              "grid: raise cellSize")
-          val out = new Array[Long]((2 * rings + 1) * (2 * rings + 1))
-          var i = 0
-          var dx = -rings
-          while (dx <= rings) {
-            var dy = -rings
-            while (dy <= rings) {
-              out(i) = cellId(cx + dx, cy + dy); i += 1; dy += 1
-            }
-            dx += 1
-          }
-          out
+          ringCellIds(c >> 32, c.toInt.toLong, rings)
         }
         val lCounts = centroids(left, "a_fid", "ax", "ay")
           .select(cellOf(col("ax"), col("ay")).as("cell"))

@@ -13,12 +13,10 @@ import graft.core.Block
   * Bounded LRU (default 32 frames — the full bench session touches ~20
   * distinct source-frame variants, so 16 thrashed); evicted entries are
   * unpersisted. Scoped per SparkSession so frames never leak across
-  * sessions. Disable with `spark.graft.frameCache=false`; size with
-  * `-Dgraft.frameCache.maxEntries=N`.
+  * sessions.
   */
 object FrameCache {
-  private val MaxEntries =
-    sys.props.get("graft.frameCache.maxEntries").map(_.toInt).getOrElse(32)
+  private val MaxEntries = 32
 
   private final case class Key(sessionId: Int, token: String, req: RasterRequest)
 
@@ -36,9 +34,6 @@ object FrameCache {
       }
     }
 
-  private def enabled(spark: SparkSession): Boolean =
-    spark.conf.getOption("spark.graft.frameCache").forall(_.toBoolean)
-
   // observability hooks (specs assert containment hits; cheap enough to
   // keep on unconditionally)
   private[graft] val hitCount = new java.util.concurrent.atomic.AtomicLong
@@ -47,22 +42,19 @@ object FrameCache {
   /** Return the persisted frame for (block, req), building it on miss. */
   def cached(block: Block, req: RasterRequest)(build: => DataFrame)(
       implicit spark: SparkSession): DataFrame = {
-    if (!enabled(spark)) build
-    else {
-      val k = Key(System.identityHashCode(spark), block.token, req)
-      cache.synchronized {
-        val hit = cache.get(k)
-        // never serve a frame bound to a stopped session (identity-hash
-        // reuse after GC could otherwise alias a dead session's entry)
-        if (hit != null && !hit.sparkSession.sparkContext.isStopped) {
-          hitCount.incrementAndGet(); hit
-        } else {
-          if (hit != null) cache.remove(k)
-          missCount.incrementAndGet()
-          val df = build.persist(StorageLevel.MEMORY_AND_DISK)
-          cache.put(k, df)
-          df
-        }
+    val k = Key(System.identityHashCode(spark), block.token, req)
+    cache.synchronized {
+      val hit = cache.get(k)
+      // never serve a frame bound to a stopped session (identity-hash
+      // reuse after GC could otherwise alias a dead session's entry)
+      if (hit != null && !hit.sparkSession.sparkContext.isStopped) {
+        hitCount.incrementAndGet(); hit
+      } else {
+        if (hit != null) cache.remove(k)
+        missCount.incrementAndGet()
+        val df = build.persist(StorageLevel.MEMORY_AND_DISK)
+        cache.put(k, df)
+        df
       }
     }
   }

@@ -937,6 +937,47 @@ object Zarr {
     payload.toByteArray
   }
 
+  /** The group document and the cell-center x/y/time coordinate arrays
+    * plus the `spatial_ref` grid-mapping member of a (time,y,x) store —
+    * everything but the data variable. Pixels must be square. */
+  private def writeGroupAndCoords(root: String, w: Int, h: Int,
+      bbox: Bbox, projection: String, timesMs: Seq[Long],
+      v3: Boolean): Unit = {
+    val cx = bbox.width / w; val cy = bbox.height / h
+    require(math.abs(cx - cy) <= 1e-9 * math.max(cx.abs, cy.abs),
+      s"zarr written here requires square pixels (got $cx x $cy)")
+    val attrs = scala.collection.immutable.ListMap(
+      "Conventions" -> "CF-1.8", "source" -> "graft zarr export")
+    if (v3)
+      FileIO.writeAll(FileIO.child(root, "zarr.json"), Json.render(
+        scala.collection.immutable.ListMap(
+          "zarr_format" -> 3L, "node_type" -> "group",
+          "attributes" -> attrs)).getBytes("UTF-8"))
+    else {
+      FileIO.writeAll(FileIO.child(root, ".zgroup"),
+        Json.render(Map("zarr_format" -> 2L)).getBytes("UTF-8"))
+      FileIO.writeAll(FileIO.child(root, ".zattrs"),
+        Json.render(attrs).getBytes("UTF-8"))
+    }
+    val nT = timesMs.length
+    writeArray(FileIO.child(root, "x"), Seq(w), Seq(w), DType.F8, Double.NaN,
+      NoComp, Seq("x"), Map("standard_name" -> "projection_x_coordinate"),
+      _ => Array.tabulate(w)(i => bbox.x1 + (i + 0.5) * cx), v3 = v3)
+    writeArray(FileIO.child(root, "y"), Seq(h), Seq(h), DType.F8, Double.NaN,
+      NoComp, Seq("y"), Map("standard_name" -> "projection_y_coordinate"),
+      _ => Array.tabulate(h)(i => bbox.y2 - (i + 0.5) * cx), v3 = v3)
+    writeArray(FileIO.child(root, "time"), Seq(nT), Seq(nT), DType.F8, Double.NaN,
+      NoComp, Seq("time"), Map(
+        "units" -> "milliseconds since 1970-01-01T00:00",
+        "calendar" -> "standard"),
+      _ => timesMs.map(_.toDouble).toArray, v3 = v3)
+    val wkt = WktSrs.toWkt(projection).getOrElse(projection)
+    writeArray(FileIO.child(root, "spatial_ref"), Seq(1), Seq(1), DType.I4, 0.0,
+      NoComp, Seq("spatial_ref"), Map(
+        "spatial_ref" -> wkt, "crs_wkt" -> wkt),
+      _ => Array(0.0), v3 = v3)
+  }
+
   /** Write a (time,y,x) stack as one Zarr v2 group: data variable with
     * per-frame spatial chunking + zlib, cell-center x/y/time coordinate
     * arrays, CRS as a `spatial_ref` grid-mapping member. y coordinates
@@ -959,44 +1000,10 @@ object Zarr {
     val dataComp: Compression =
       if (!zlib) NoComp else if (v3) Zstd else Zlib
     val dt = DType.byName(dtypeName)
-    val cx = bbox.width / w; val cy = bbox.height / h
-    require(math.abs(cx - cy) <= 1e-9 * math.max(cx.abs, cy.abs),
-      s"zarr written here requires square pixels (got $cx × $cy)")
     val root = url
-    if (v3)
-      FileIO.writeAll(FileIO.child(root, "zarr.json"), Json.render(
-        scala.collection.immutable.ListMap(
-          "zarr_format" -> 3L, "node_type" -> "group",
-          "attributes" -> scala.collection.immutable.ListMap(
-            "Conventions" -> "CF-1.8",
-            "source" -> "graft zarr export"))).getBytes("UTF-8"))
-    else {
-      FileIO.writeAll(FileIO.child(root, ".zgroup"),
-        Json.render(Map("zarr_format" -> 2L)).getBytes("UTF-8"))
-      FileIO.writeAll(FileIO.child(root, ".zattrs"), Json.render(
-        scala.collection.immutable.ListMap(
-          "Conventions" -> "CF-1.8",
-          "source" -> "graft zarr export")).getBytes("UTF-8"))
-    }
+    writeGroupAndCoords(root, w, h, bbox, projection, timesMs, v3)
     val cH = math.min(chunkH, h); val cW = math.min(chunkW, w)
     val nT = bands.length
-
-    writeArray(FileIO.child(root, "x"), Seq(w), Seq(w), DType.F8, Double.NaN,
-      NoComp, Seq("x"), Map("standard_name" -> "projection_x_coordinate"),
-      _ => Array.tabulate(w)(i => bbox.x1 + (i + 0.5) * cx), v3 = v3)
-    writeArray(FileIO.child(root, "y"), Seq(h), Seq(h), DType.F8, Double.NaN,
-      NoComp, Seq("y"), Map("standard_name" -> "projection_y_coordinate"),
-      _ => Array.tabulate(h)(i => bbox.y2 - (i + 0.5) * cx), v3 = v3)
-    writeArray(FileIO.child(root, "time"), Seq(nT), Seq(nT), DType.F8, Double.NaN,
-      NoComp, Seq("time"), Map(
-        "units" -> "milliseconds since 1970-01-01T00:00",
-        "calendar" -> "standard"),
-      _ => timesMs.map(_.toDouble).toArray, v3 = v3)
-    val wkt = WktSrs.toWkt(projection).getOrElse(projection)
-    writeArray(FileIO.child(root, "spatial_ref"), Seq(1), Seq(1), DType.I4, 0.0,
-      NoComp, Seq("spatial_ref"), Map(
-        "spatial_ref" -> wkt, "crs_wkt" -> wkt),
-      _ => Array(0.0), v3 = v3)
     val shardInner =
       if (shardSplit <= 0) None
       else {
@@ -1063,32 +1070,8 @@ object Zarr {
     require(w > 0 && h > 0 && w.toLong * h <= (1L << 27),
       s"zarr: ${w}x$h frame too large for one shard (2^27 elements)")
     val dt = DType.byName(dtypeName)
-    val cx = bbox.width / w; val cy = bbox.height / h
-    require(math.abs(cx - cy) <= 1e-9 * math.max(cx.abs, cy.abs),
-      s"zarr written here requires square pixels (got $cx x $cy)")
     val root = url
-    FileIO.writeAll(FileIO.child(root, "zarr.json"), Json.render(
-      scala.collection.immutable.ListMap(
-        "zarr_format" -> 3L, "node_type" -> "group",
-        "attributes" -> scala.collection.immutable.ListMap(
-          "Conventions" -> "CF-1.8",
-          "source" -> "graft zarr export"))).getBytes("UTF-8"))
-    writeArray(FileIO.child(root, "x"), Seq(w), Seq(w), DType.F8, Double.NaN,
-      NoComp, Seq("x"), Map("standard_name" -> "projection_x_coordinate"),
-      _ => Array.tabulate(w)(i => bbox.x1 + (i + 0.5) * cx), v3 = true)
-    writeArray(FileIO.child(root, "y"), Seq(h), Seq(h), DType.F8, Double.NaN,
-      NoComp, Seq("y"), Map("standard_name" -> "projection_y_coordinate"),
-      _ => Array.tabulate(h)(i => bbox.y2 - (i + 0.5) * cx), v3 = true)
-    writeArray(FileIO.child(root, "time"), Seq(timesMs.length),
-      Seq(timesMs.length), DType.F8, Double.NaN, NoComp, Seq("time"),
-      Map("units" -> "milliseconds since 1970-01-01T00:00",
-        "calendar" -> "standard"),
-      _ => timesMs.map(_.toDouble).toArray, v3 = true)
-    val wkt = WktSrs.toWkt(projection).getOrElse(projection)
-    writeArray(FileIO.child(root, "spatial_ref"), Seq(1), Seq(1), DType.I4, 0.0,
-      NoComp, Seq("spatial_ref"),
-      Map("spatial_ref" -> wkt, "crs_wkt" -> wkt),
-      _ => Array(0.0), v3 = true)
+    writeGroupAndCoords(root, w, h, bbox, projection, timesMs, v3 = true)
     val (cH, cW) = (math.min(chunkH, h), math.min(chunkW, w))
     writeArray(FileIO.child(root, varName),
       Seq(timesMs.length, h, w), frameShardShape(w, h, cH, cW), dt,

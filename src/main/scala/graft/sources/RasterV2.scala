@@ -514,13 +514,8 @@ case class GraftTifPartition(path: String, frames: Array[Int],
 object GraftScan {
   /** Bounded planning fan-out: enough to hide per-file metadata latency
     * (the object-storage case this connector exists for), small enough
-    * not to stampede a driver-side connection pool. Overridable via
-    * -Dgraft.raster.planParallelism (1 = the serial baseline). */
-  def PlanParallelism: Int = {
-    val p = Integer.getInteger("graft.raster.planParallelism", 32).intValue()
-    require(p >= 1, s"graft.raster.planParallelism must be >= 1 (got $p)")
-    p
-  }
+    * not to stampede a driver-side connection pool. */
+  val PlanParallelism = 32
 }
 
 class GraftScan(paths: Seq[String], tMin: Long, tMax: Long,

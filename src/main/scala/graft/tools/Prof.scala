@@ -1,16 +1,17 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
+import graft.Harness
 
 /** Per-lane profiling driver for the optimization rounds: runs named
   * queries in isolation (fresh-JVM comparable), times `reps` executions
-  * with the SAME action as the bench (`.count()`), and optionally dumps
-  * `.explain("formatted")` to a file per query.
+  * with the SAME action as the bench (`Harness.materialize`), and
+  * optionally dumps `.explain("formatted")` to a file per query.
   *
   * Usage:
   *   runMain graft.tools.Prof <sfDir> <reps> <outDirOrNONE> <q1,q2,...>
   *
-  * Prints one JSON line per (query, rep) and a min line per query.
+  * Prints one JSON line per (query, rep) and a min line per query; a
+  * query whose rep throws gets an "err" marker and sec -1 on its min line.
   */
 object Prof {
   def main(args: Array[String]): Unit = {
@@ -18,23 +19,8 @@ object Prof {
     val reps = args(1).toInt
     val outDir = args(2)
     val names = args(3).split(",").map(_.trim).filter(_.nonEmpty)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    // same untimed warmup as the bench: JIT priming + shared frame cache
-    try {
-      graft.SparkEntry.entry(spark).count()
-      val g = graft.QueryLib.eventsGrid(spark, sfDir)
-      graft.QueryLib.eventsRaster(sfDir, g)
-        .frame(graft.QueryLib.fullReq(g))(spark).count()
-    } catch { case _: Throwable => }
+    val spark = Harness.session()
+    Harness.warmup(spark, sfDir)
     for (name <- names) {
       val fn = graft.SparkEntry.queries(name)
       if (outDir != "NONE") {
@@ -44,15 +30,17 @@ object Prof {
         java.nio.file.Files.writeString(
           java.nio.file.Paths.get(outDir, s"$name.txt"), plan)
       }
-      val ts = (1 to reps).map { i =>
-        spark.sparkContext.setJobDescription(s"prof:$name#$i")
-        val t0 = System.nanoTime()
-        val n = fn(spark, sfDir).count()
-        val sec = (System.nanoTime() - t0) / 1e9
-        println(s"""{"prof":"$name","rep":$i,"sec":$sec,"rows":$n}""")
-        sec
+      var rep = 0
+      val (ts, err) = Harness.steadyReps(reps) {
+        rep += 1
+        spark.sparkContext.setJobDescription(s"prof:$name#$rep")
+        Harness.materialize(fn(spark, sfDir))
       }
-      println(s"""{"prof_min":"$name","sec":${ts.min},"reps":$reps}""")
+      ts.zipWithIndex.foreach { case (sec, i) =>
+        println(s"""{"prof":"$name","rep":${i + 1},"sec":$sec}""")
+      }
+      val min = if (err.isEmpty) ts.minOption.getOrElse(-1.0) else -1.0
+      println(s"""{"prof_min":"$name","sec":$min,"reps":$reps${Harness.errField(err)}}""")
     }
     spark.stop()
   }

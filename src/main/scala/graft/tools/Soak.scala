@@ -2,9 +2,10 @@ package graft.tools
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.Harness
 
-/** Round-14 scale soak: the FULL query suite at sf1 (10× the bench's
-  * sf0.1), to flush constant factors invisible at sf0.1.
+/** Scale soak: the FULL query suite at sf1 (10× the bench's sf0.1), to
+  * flush constant factors invisible at sf0.1.
   *
   * `gen <outDir>`: builds sf1 tables at `outDir` as the union of 10
   * key-shifted copies of sf0.1 — foreign keys shift consistently
@@ -14,21 +15,13 @@ import org.apache.spark.sql.functions._
   * in place (same time window and text/vector space, 10× the rows —
   * the realistic scale-up for window joins and dedup).
   *
-  * `sweep <sfDir>`: ONE pass over every SparkEntry query with
+  * `sweep <sfDir>`: ONE pass over every SparkEntry query, each lane
+  * timed by `Harness.lane` (the bench's materializing action), with
   * per-query wall seconds and per-query PEAK HEAP (pool high-water
   * marks reset before each query, the Bench r11 protocol), one JSON
   * line per query + a summary line.
   */
-object SoakR14 {
-
-  private def heapPools = {
-    import scala.jdk.CollectionConverters._
-    java.lang.management.ManagementFactory.getMemoryPoolMXBeans.asScala
-      .filter(_.getType == java.lang.management.MemoryType.HEAP)
-  }
-  private def resetHeapPeaks(): Unit = heapPools.foreach(_.resetPeakUsage())
-  private def lanePeakMb: Long =
-    heapPools.map(_.getPeakUsage.getUsed).sum >> 20
+object Soak {
 
   /** LIVE-SET heap (post-GC used bytes): peak high-water tracks the
     * -Xmx neighborhood under a generational collector (74 GB peak under
@@ -37,21 +30,7 @@ object SoakR14 {
     * decades and heap ceilings. */
   private def liveSetMb: Long = {
     System.gc()
-    heapPools.map(_.getUsage.getUsed).sum >> 20
-  }
-
-  private def session(): SparkSession = {
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    spark
+    Harness.heapPools.map(_.getUsage.getUsed).sum >> 20
   }
 
   /** Union of `copies` key-shifted replicas: each column in `shifts`
@@ -112,48 +91,28 @@ object SoakR14 {
 
   def sweep(spark: SparkSession, sfDir: String): Unit = {
     val filter = sys.env.get("SPARK_GRAFT_BENCH_FILTER").map(_.r)
-    val names = SparkEntryNames.all
+    val names = graft.SparkEntry.queries.keys.toSeq.sorted
       .filter(n => filter.forall(_.findFirstIn(n).isDefined))
-    // untimed warmup (JIT + the shared source-frame reshape); big grids
-    // also raise the reference-compat raster-limit guard the way a
+    // big grids raise the reference-compat raster-limit guard the way a
     // real user with executor headroom would (config.py raster-limit —
     // the full-grid lane requests exceed the laptop default past sf30)
-    try {
-      val g = graft.QueryLib.eventsGrid(spark, sfDir)
-      graft.raster.RequestGuards.rasterLimitPixels = math.max(
-        graft.raster.RequestGuards.rasterLimitPixels, 2L * g.w * g.h)
-      graft.QueryLib.eventsRaster(sfDir, g)
-        .frame(graft.QueryLib.fullReq(g))(spark).count()
-    } catch { case _: Throwable => }
+    val g = graft.QueryLib.eventsGrid(spark, sfDir)
+    graft.raster.RequestGuards.rasterLimitPixels = math.max(
+      graft.raster.RequestGuards.rasterLimitPixels, 2L * g.w * g.h)
+    Harness.warmup(spark, sfDir)
     var total = 0.0
     var worst = 0L
     val rows = names.map { name =>
-      val fn = graft.SparkEntry.queries(name)
-      resetHeapPeaks()
-      val t0 = System.nanoTime()
-      val res =
-        try { val n = fn(spark, sfDir).count()
-          Right(((System.nanoTime() - t0) / 1e9, n)) }
-        catch { case e: Throwable =>
-          Left(e.getClass.getSimpleName + ": " +
-            Option(e.getMessage).getOrElse("").take(140)
-              .replaceAll("[\"\\\\\n\r]", " "))
-        }
-      val peak = lanePeakMb
+      Harness.resetHeapPeaks()
+      val res = Harness.lane(graft.SparkEntry.queries(name)(spark, sfDir))
+      val peak = Harness.lanePeakMb
       worst = math.max(worst, peak)
       // live set AFTER the timed window: the System.gc cost lands
-      // between lanes, not inside any lane's seconds. Opt out for
-      // tight A/B timing runs with SPARK_GRAFT_SOAK_LIVESET=false.
-      val live =
-        if (sys.env.get("SPARK_GRAFT_SOAK_LIVESET").contains("false")) -1L
-        else liveSetMb
-      res match {
-        case Right((sec, n)) =>
-          total += sec
-          println(s"""{"soak_query":"$name","sec":$sec,"rows":$n,"peak_heap_mb":$peak,"live_heap_mb":$live}""")
-        case Left(e) =>
-          println(s"""{"soak_query":"$name","sec":-1,"err":"$e","peak_heap_mb":$peak,"live_heap_mb":$live}""")
-      }
+      // between lanes, not inside any lane's seconds
+      val live = liveSetMb
+      res.foreach(total += _)
+      println(s"""{"soak_query":"$name","sec":${res.getOrElse(-1.0)}${
+        Harness.errField(res.left.toOption)},"peak_heap_mb":$peak,"live_heap_mb":$live}""")
       name -> res
     }
     val errs = rows.collect { case (n, Left(e)) => n -> e }
@@ -164,22 +123,17 @@ object SoakR14 {
   }
 
   def main(args: Array[String]): Unit = {
-    val spark = session()
-    args.toList match {
+    val spark = Harness.session()
+    try args.toList match {
       case "gen" :: out :: rest =>
         val copies = rest.headOption.map(_.toInt).getOrElse(10)
         gen(spark, "/root/testdata/sf0.1", out, copies,
           perturbDocs = rest.contains("neardup"))
       case "sweep" :: dir :: _ => sweep(spark, dir)
       case other => sys.error(s"usage: gen <outDir> [copies] | sweep <sfDir> (got $other)")
+    } finally {
+      graft.QueryLib.clearCaches()
+      spark.stop()
     }
-    graft.QueryLib.clearCaches()
-    spark.stop()
   }
-}
-
-/** Query-name listing shared with Bench (kept tiny and separate so the
-  * soak tool can enumerate without touching Bench's session). */
-private object SparkEntryNames {
-  def all: Seq[String] = graft.SparkEntry.queries.keys.toSeq.sorted
 }

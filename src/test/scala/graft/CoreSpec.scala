@@ -335,15 +335,33 @@ class GeometrySerdeSpec extends SparkSpec {
 
   test("bench steady lane: a throwing query yields an error marker, " +
       "never a timing (r10 ADVICE)") {
-    val (tsOk, errOk) = Bench.steadyReps(5) { () }
+    val (tsOk, errOk) = Harness.steadyReps(5) { () }
     assert(errOk.isEmpty && tsOk.length == 5)
     var n = 0
-    val (tsBad, errBad) = Bench.steadyReps(5) {
+    val (tsBad, errBad) = Harness.steadyReps(5) {
       n += 1
       if (n >= 3) throw new IllegalStateException("deliberate rep failure")
     }
     // two completed reps, then the throw aborts the lane with a marker
     assert(tsBad.length == 2)
     assert(errBad.exists(_.contains("deliberate rep failure")), errBad)
+  }
+
+  test("harness lanes drive every column: a throwing column that count() " +
+      "prunes fails materialize and yields an error marker") {
+    import org.apache.spark.sql.functions.{col, udf}
+    val boom = udf { (x: Long) =>
+      if (x >= 0) throw new IllegalStateException("deliberate column failure")
+      x
+    }
+    def df = spark.range(3).select(col("id"), boom(col("id")).as("boom"))
+    // count() prunes the unused column, so it never runs the UDF
+    assert(df.count() == 3)
+    val e = intercept[Exception](Harness.materialize(df))
+    def messages(t: Throwable): String =
+      if (t == null) "" else t.getMessage + "|" + messages(t.getCause)
+    assert(messages(e).contains("deliberate column failure"), messages(e))
+    val lane = Harness.lane(df)
+    assert(lane.isLeft, s"expected an error marker, got a timing: $lane")
   }
 }

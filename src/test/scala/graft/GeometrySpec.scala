@@ -434,4 +434,27 @@ class RasterMetaSpec extends SparkSpec {
       if (t == null) "" else t.getMessage + "|" + messages(t.getCause)
     assert(messages(e).contains("32-bit cell grid"))
   }
+
+  test("nearestWithin: a ring crossing the 32-bit grid edge fails loudly") {
+    val sp = spark
+    import sp.implicits._
+    import org.apache.spark.sql.functions._
+    def pt(fid: Long, wkt: String) = Seq((fid, wkt)).toDF("fid", "wkt")
+      .select(col("fid"), GeomFunctions.stGeomFromWkt(col("wkt")).as("geometry"))
+    // the centre cell 2^31 - 2 fits the grid; its 2-ring reaches 2^31
+    val edge = pt(1L, "POINT (2147483646.5 0.5)")
+    val near = pt(2L, "POINT (0.5 0.5)")
+    def messages(t: Throwable): String =
+      if (t == null) "" else t.getMessage + "|" + messages(t.getCause)
+    // skewGuard on fails in the stats pass, off in the left ring explode
+    for (guard <- Seq(true, false)) {
+      val e = intercept[Exception] {
+        SpatialJoin.nearestWithin(edge, near, k = 1, maxDist = 2.0,
+          cellSize = 1.0, skewGuard = guard).collect()
+      }
+      assert(messages(e).contains(
+        "cell (2147483646, 0) ± 2 rings exceeds the 32-bit cell grid"),
+        s"skewGuard=$guard: ${messages(e)}")
+    }
+  }
 }

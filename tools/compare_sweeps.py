@@ -1,5 +1,5 @@
 #!/usr/bin/env python3
-"""Diff two SoakR14 sweep logs (JSON lines with soak_query/sec/peak_heap_mb).
+"""Diff two Soak sweep logs (JSON lines with soak_query/sec/peak_heap_mb).
 
 Usage: compare_sweeps.py <baseline.log> <tuned.log> [topN]
 
